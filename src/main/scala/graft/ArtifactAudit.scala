@@ -1,6 +1,5 @@
 package graft
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import graft.operators.ArtifactCache
 
 /** Dev tool: MEASURED cold-build vs warm-probe cost per artifact-store
@@ -13,21 +12,13 @@ import graft.operators.ArtifactCache
   * build and the warm column is what every search/probe/report pays —
   * the gap IS the artifact story, measured instead of narrated.
   *
-  * Usage: ArtifactAudit [sfDir]; SPARK_GRAFT_CPUS (default 8). Deletes
+  * Usage: ArtifactAudit [sfDir]; SPARK_GRAFT_CPUS (default 4). Deletes
   * ONLY the five audited family directories under [[ArtifactCache.root]].
   */
 object ArtifactAudit {
   def main(args: Array[String]): Unit = {
     val d = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosConf, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    val spark = Harness.session(Harness.cpus)
     // one representative consumer per store family; each family's other
     // consumers share the same artifacts, so one probe stands for all
     val reps = Seq(
@@ -37,11 +28,9 @@ object ArtifactAudit {
       ("io", "graft_io", "io_compact"),
       ("graph", "graft_graph", "graph_hyper_anf"))
     def time(q: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(q)(spark, d).count()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      (System.nanoTime() - t0) / 1e9
+      val run = Harness.run(spark)(SparkEntry.queries(q)(spark, d).count())
+      run.result.get // a failed build or probe is not a timing
+      run.seconds
     }
     println(f"${"family"}%-7s ${"query"}%-22s ${"cold_s"}%8s ${"warm_s"}%8s" +
       f" ${"ratio"}%7s builds hits")

@@ -1,16 +1,29 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Bench main: times every registered query (fn(spark, sfDir).count()) and
-  * prints ONE compact JSON line. `value` is the wall total over ALL queries;
-  * the `queries` map is limited to the BASELINE.md headline anchors plus the
-  * five slowest others so the line stays well under the driver's stdout tail
-  * capture (round 1 emitted all 73 timings ≈ 2.4 KB and the line was
-  * truncated before its start, recording `parsed: null`).
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** Bench main: times registered queries (fn(spark, sfDir).count(), min of
+  * SPARK_GRAFT_REPS reps; the default 1 is the cold contract run) on one
+  * [[Harness]] session.
+  *
+  * With no arguments it times the whole registry and prints ONE compact
+  * JSON line with a fixed key set. `value` is the wall total over ALL
+  * queries; the `queries` map holds exactly the [[headline]] anchors so
+  * the line stays well under a stdout tail capture (round 1
+  * emitted all 73 timings ≈ 2.4 KB and the line was truncated before its
+  * start, recording `parsed: null`). The line also goes to
+  * BENCH_LOCAL.json and every query's time to BENCH_FULL_LOCAL.json.
+  *
+  * With query names it times only those and prints one line per query:
+  * the min, every rep, and the Spark jobs each rep ran. It writes no file.
+  * Usage: runMain graft.Bench [query ...]
   */
 object Bench {
   /** Registry names matching the 8 measured anchor queries in BASELINE.md. */
-  private val headline = Seq(
+  private[graft] val headline = Seq(
     "agg_q1_pricing_summary", // q1 pricing summary
     "join_3way_topk",         // q3 join3 topk
     "join_5way_star",         // q5 star join
@@ -20,121 +33,85 @@ object Bench {
     "agg_wordcount",          // doc wordcount
     "sim_top_pairs")          // cosine pairs
 
-  /** The sweep-instrument queries (tuning-knob measurement twins, not
-    * production paths): their subtotal rides along as `instruments_s`
-    * so "net of instruments" is machine-readable instead of re-derived
-    * from BASELINE.md prose every round (r16 verdict #5). Membership
-    * is declared AT REGISTRATION (OpFamily.instruments, r17 verdict
-    * #6) — each family tags its own sweeps, so a new instrument can
-    * never silently miss this subtotal.
+  /** The sweep-instrument queries (tuning-knob measurement twins declared
+    * at registration, OpFamily.instruments): their subtotal rides along as
+    * `instruments_s` so "net of instruments" is machine-readable.
     */
   private val instruments = SparkEntry.instruments
 
   def main(args: Array[String]): Unit = {
+    val picked = Harness.select(args.toSeq)
+    Harness.select(headline) // fails loudly on an unregistered anchor
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosConf, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt.max(1)
     // Self-identifying contention (r15 verdict: a driver run that
     // overlapped the builder's close gates read 6× on two join anchors
     // and cost a round of adjudication): sample the 1-minute loadavg
     // BEFORE any query runs — a load_hint far above ~0 means the box
     // was already busy and anchors should be re-measured isolated.
-    val loadHint =
-      try {
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/loadavg")),
-          java.nio.charset.StandardCharsets.UTF_8).split(" ")(0)
-      } catch { case _: Throwable => "-1" }
-    // one throwaway job so JVM/codegen warm-up isn't billed to the first query
-    spark.range(1000).selectExpr("sum(id)").collect()
-    // SPARK_GRAFT_REPS>1 = steady-state mode (min of N reps, amortizing
-    // per-query codegen compile); default 1 = cold, the driver's contract
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt.max(1)
+    val loadHint = scala.util.Try(
+      Files.readString(Paths.get("/proc/loadavg")).split(" ")(0)).getOrElse("-1")
+    val spark = Harness.session(Harness.cpus)
+    val jobs = new AtomicInteger
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    })
+    val results = picked.map { case (name, fn) =>
+      val runs = (1 to reps).map { _ =>
+        val j0 = jobs.get()
+        val run = Harness.run(spark)(fn(spark, sfDir).count())
+        if (args.nonEmpty) Thread.sleep(200) // listener events are async
+        (run, jobs.get() - j0)
+      }
+      val ts = runs.map(_._1.seconds)
+      if (args.nonEmpty) println(f"[bench] $name%-32s min ${ts.min}%.3f  all " +
+        ts.map(t => f"$t%.3f").mkString(" ") + s"  jobs ${runs.map(_._2).mkString(" ")}" +
+        firstError(runs.map(_._1)).fold("")(e => s"  FAILED: $e"))
+      (name, runs.map(_._1))
+    }
+    if (args.isEmpty) ledger(results, reps, loadHint, sfDir)
+    spark.stop()
+  }
+
+  private def firstError(runs: Seq[Harness.Run[_]]): Option[Throwable] =
+    runs.flatMap(_.result.failed.toOption).headOption
+
+  private def ledger(results: Seq[(String, Seq[Harness.Run[Long]])], reps: Int,
+      loadHint: String, sfDir: String): Unit = {
+    val mins = results.map { case (n, runs) => n -> runs.map(_.seconds).min }
+    val times = mins.toMap
+    // Locale.ROOT: a comma-decimal default locale would emit invalid JSON
+    def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    def obj(names: Seq[String]) = names.map(n => s"${Harness.json(n)}:${num(times(n))}")
+      .mkString("{", ",", "}")
     // Failure ledger: a query that throws must NOT be silently billed its
     // time-to-failure with rc 0 — that hole let round 8 report a 755.7 s
     // "total" over ~50 fast-failing queries with no error signal. Every
-    // exception is counted and the first failing (name, message) surfaces
-    // in the JSON line.
-    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch {
-          case e: Throwable =>
-            failed.getOrElseUpdate(name,
-              s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
-      // Release the blocks this query pinned: localCheckpoint keeps its RDD
-      // persisted until the DataFrame is GC'd AND the async ContextCleaner
-      // runs, so 130+ sequential queries leak checkpoint blocks into the
-      // BlockManager and the eviction churn bills whichever queries run
-      // mid-pressure (the dedup_/filter_/graph_ stretch spiked 10-40x in one
-      // run while the anchors before and after sat at normal values). A real
-      // cluster app runs one query per driver; the bench must reset to that
-      // state between queries, outside the timed region.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      name -> times.min
+    // failing query is counted and the first (name, message) surfaces.
+    val failed = results.flatMap { case (n, runs) => firstError(runs).map(n -> _) }
+    val errPart = failed.headOption.fold(""""errors":0""") { case (n0, e) =>
+      val msg = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}"
+      s""""errors":${failed.size},"first_error":{"query":${Harness.json(n0)},"message":${Harness.json(msg)}}"""
     }
-    val slowest = results.filterNot(r => headline.contains(r._1))
-      .sortBy(-_._2).take(5).map(_._1)
-    val shown = results.filter { case (n, _) =>
-      headline.contains(n) || slowest.contains(n) }
-    // Locale.ROOT: a comma-decimal default locale would emit invalid JSON
-    def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = shown.map { case (k, v) => s""""$k":${num(v)}""" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    val errPart = if (failed.isEmpty) """"errors":0"""
-      else {
-        val (n0, msg) = failed.head
-        s""""errors":${failed.size},"first_error":{"query":${jstr(n0)},"message":${jstr(msg)}}"""
-      }
     // Artifact-store transparency: a "cold" (REPS=1) total that re-attached
     // warm build-once/probe-many indexes (IVF, pair table, component) is not
-    // comparable to one that built them — surface the counts so readers can
-    // tell which run they are looking at (r10 advice).
+    // comparable to one that built them — surface the counts, and label the
+    // mode so a reader never reverse-engineers it: builds=0 means every
+    // persisted artifact was re-attached from a pre-existing store.
     val builds = operators.ArtifactCache.builds.get()
     val cache = s""""artifact_cache":{"hits":${operators.ArtifactCache.hits.get()},"builds":$builds}"""
-    // Labeled mode, so a reader never reverse-engineers warm-vs-cold from
-    // the builds counter (r12 advice): builds=0 means every persisted
-    // artifact was re-attached from a pre-existing /tmp/graft_* store.
     val mode =
       if (reps > 1) "steady"
       else if (builds == 0) "warm_store" else "true_cold"
-    val instrumentsS = results.filter(r => instruments.contains(r._1))
-      .map(_._2).sum
-    // reps rides along so a reader knows each query's time is best-of-N
-    val line = s"""{"metric":"total","value":${num(total)},"unit":"sec","mode":"$mode","reps":$reps,"load_hint":$loadHint,"n_queries":${results.size},"instruments_s":${num(instrumentsS)},$errPart,$cache,"queries":$qs,"sf":"$sfDir"}"""
+    val instrumentsS = mins.filter(m => instruments.contains(m._1)).map(_._2).sum
+    val line = s"""{"metric":"total","value":${num(mins.map(_._2).sum)},"unit":"sec","mode":"$mode","reps":$reps,"load_hint":$loadHint,"n_queries":${results.size},"instruments_s":${num(instrumentsS)},$errPart,$cache,"queries":${obj(headline)},"sf":${Harness.json(sfDir)}}"""
     println(line)
-    // Belt-and-braces for the driver's tail-scrape: also persist the line to a
-    // file that survives any stdout wrapping/truncation.
+    // Belt-and-braces for a tail-scrape of stdout: also persist the line,
+    // and the full per-query map for optimization work, to local files.
     try {
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Files.write(Paths.get("BENCH_LOCAL.json"), (line + "\n").getBytes(UTF_8))
+      Files.write(Paths.get("BENCH_FULL_LOCAL.json"),
+        (obj(results.map(_._1)) + "\n").getBytes(UTF_8))
     } catch { case _: Throwable => () }
-    // Optimization-work ledger (local only, never the driver's line): the
-    // FULL per-query timing map, so a slow query outside the headline+5
-    // window is visible without re-instrumenting.
-    try {
-      val full = results.map { case (k, v) => s""""$k":${num(v)}""" }
-        .mkString("{", ",", "}")
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL_LOCAL.json"),
-        (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
-    spark.stop()
   }
 }

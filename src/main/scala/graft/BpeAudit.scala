@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: BPE learn-wall vs merge count — the measured backing for
@@ -14,26 +13,15 @@ import org.apache.spark.sql.functions._
   * swaps the corpus for the deterministic open-vocabulary generator
   * (TextOps.openVocabWords, default 50k word ids) whose merges do NOT
   * exhaust — the k >= 256 rows in BASELINE.md come from this mode
-  * with applied = k for real (r17 verdict #2). SPARK_GRAFT_BPE_BATCH
-  * overrides the per-round merge batch cap (1 = the classic
-  * one-merge-per-round loop, for before/after walls).
+  * with applied = k for real (r17 verdict #2). Every learn runs the
+  * shipped per-round merge batch cap, TextOps.BpeBatchCap.
   */
 object BpeAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val ks = if (args.length > 1) args.tail.map(_.toInt).toSeq
       else Seq(8, 64, 256)
-    val batchCap = sys.env.get("SPARK_GRAFT_BPE_BATCH").map(_.toInt)
-      .getOrElse(operators.TextOps.BpeBatchCap)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosConf, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    val spark = Harness.session(Harness.cpus)
     val words =
       // exact-match the sentinel (r18 advice): a real corpus directory
       // whose PATH merely begins with "open" (./openwebtext) must read
@@ -45,21 +33,19 @@ object BpeAudit {
         .select(split(col("text"), " ").as("w"))
         .select(explode(col("w")).as("word"))
     ks.foreach { k =>
-      val t0 = System.nanoTime()
       val r0 = operators.TextOps.bpeRoundTrips.get()
-      val (merges, snaps) =
-        operators.TextOps.bpeLearnSnapshots(spark, words, Seq(k), batchCap)
-      val applied = merges.count()
+      val run = Harness.run(spark) {
+        val (merges, snaps) = operators.TextOps.bpeLearnSnapshots(spark, words, Seq(k))
+        (merges.count(), snaps.head._2
+          .agg(sum(col("cnt") * size(col("s")))).head().getLong(0))
+      }
+      val (applied, toks) = run.result.get
       val rounds = operators.TextOps.bpeRoundTrips.get() - r0
-      val toks = snaps.head._2
-        .agg(sum(col("cnt") * size(col("s")))).head().getLong(0)
-      val wall = (System.nanoTime() - t0) / 1e9
+      val wall = run.seconds
       println(f"[bpe-audit] $sfDir k=$k%4d applied=$applied%4d " +
         f"rounds=$rounds%4d wall=$wall%7.2f s " +
         f"per_merge=${wall / math.max(1L, applied)}%6.3f s " +
         f"tokens_after=$toks%10d")
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
     }
     spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: MEASURED scaling evidence for the 100 TB story. Times every
   * registered query at two scale factors in ONE JVM (min of REPS, warm
@@ -17,8 +16,9 @@ import org.apache.spark.sql.SparkSession
   * by measurement instead of plan-reading.
   *
   * Usage: ScalingAudit [sfSmall] [sfBig] [query ...] (no names = all);
-  * SPARK_GRAFT_REPS (default 3). The anomaly threshold is the DATA
-  * ratio derived from the sf tags in the two paths (fallback 10x).
+  * SPARK_GRAFT_REPS (default 3), SPARK_GRAFT_CPUS (default 4). The
+  * anomaly threshold is the DATA ratio derived from the sf tags in the
+  * two paths (fallback 10x).
   * Prints one line per query sorted by descending ratio, then a
   * summary; a query that FAILS at either SF prints an ERR marker and
   * is counted in the summary (exit 2) — a failure is never evidence
@@ -28,36 +28,18 @@ object ScalingAudit {
   def main(args: Array[String]): Unit = {
     val small = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val big = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val picked = Harness.select(args.drop(2).toSeq)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosConf, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    val spark = Harness.session(Harness.cpus)
     // a failed run must NOT be timed as a near-zero success — that would
     // print a tiny ratio and a clean summary for exactly the queries
     // that break at the big SF. None per failed SF, counted and marked.
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        d: String): Option[Double] = {
-      val ts = (1 to reps).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, d).count()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch {
-          case e: Throwable =>
-            Console.err.println(s"ERR at $d: ${e.getClass.getSimpleName}" +
-              s": ${String.valueOf(e.getMessage).take(200)}")
-            None
-        }
-      }
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      if (ts.size < reps) None else Some(ts.min)
+    def time(fn: Harness.Query, d: String): Option[Double] = {
+      val runs = (1 to reps).map(_ => Harness.run(spark)(fn(spark, d).count()))
+      runs.flatMap(_.result.failed.toOption).foreach(e =>
+        Console.err.println(s"ERR at $d: ${e.getClass.getSimpleName}" +
+          s": ${String.valueOf(e.getMessage).take(200)}"))
+      if (runs.exists(_.result.isFailure)) None else Some(runs.map(_.seconds).min)
     }
     // the anomaly threshold is the DATA ratio, derived from the sf tags
     // in the two paths (big tables grow ~linearly in sf); 10x only as
@@ -67,10 +49,7 @@ object ScalingAudit {
         .map(_.group(1).toDouble)
     val dataRatio = (for { a <- sfOf(small); b <- sfOf(big) if a > 0 && b > 0 }
       yield b / a).getOrElse(10.0)
-    val only = args.drop(2).toSet
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .map { case (name, fn) =>
+    val rows = picked.map { case (name, fn) =>
       val tS = time(fn, small)
       val tB = time(fn, big)
       val ratio = for { a <- tS; b <- tB } yield b / a

@@ -17,22 +17,13 @@ object Graft {
 
   private def toks(textCol: String): Column = split(col(textCol), " ")
 
-  /** Word 3-shingles of a whitespace-tokenized text column, hashed to
-    * int64 and de-duplicated + sorted (ready for set similarity).
-    */
-  private def shingleSets(df: DataFrame, id: String, text: String): DataFrame =
-    df.select(col(id),
-      array_sort(array_distinct(transform(
-        graft.operators.TextOps.shingles3(toks(text)), xxhash64(_))))
-        .as("sh"))
-
   // ---------------------------------------------------------------- dedup
 
   /** Exact duplicate groups by normalized content hash: one row per
     * duplicated content value with the kept (min) id and group size.
     */
   def exactDuplicates(df: DataFrame, id: String, text: String): DataFrame = {
-    val normalized = regexp_replace(trim(lower(col(text))), " +", " ")
+    val normalized = graft.operators.TextOps.normalizedText(col(text))
     df.groupBy(md5(normalized).as("fp"))
       .agg(count(lit(1)).as("n"), min(col(id)).as("keep_id"))
       .filter(col("n") > 1)
@@ -740,7 +731,7 @@ object Graft {
       col(stratumCol).cast("string").as("stratum"), col(text).as("text"))
     val quality = base.filter(size(toks("text")) >= minTokens)
     val fped = quality.withColumn("fp",
-      md5(regexp_replace(trim(lower(col("text"))), " +", " ")))
+      md5(graft.operators.TextOps.normalizedText(col("text"))))
     val exact = fped.join(
         fped.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id")),
         Seq("fp", "doc_id"), "left_semi")
@@ -1007,7 +998,7 @@ object Graft {
 
   /** Content fingerprints of whitespace-normalized text. */
   def fingerprints(df: DataFrame, id: String, text: String): DataFrame = {
-    val normalized = regexp_replace(trim(lower(col(text))), " +", " ")
+    val normalized = graft.operators.TextOps.normalizedText(col(text))
     df.select(col(id), md5(normalized).as("fp_md5"),
       substring(sha2(normalized, 256), 1, 16).as("fp64"))
   }

@@ -27,15 +27,11 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, ArrayType, I
   */
 object NativeExprs {
 
-  /** debug: interpreted-eval call counter (see Scratch) */
-  val evalCount = new java.util.concurrent.atomic.AtomicLong()
-
   /** Count of common elements of two SORTED, de-duplicated long arrays. */
   case class SortedLongIntersectCount(left: Expression, right: Expression)
       extends BinaryExpression {
     override def dataType: DataType = IntegerType
     override protected def nullSafeEval(l: Any, r: Any): Any = {
-      evalCount.incrementAndGet()
       val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
       var i = 0; var j = 0; var c = 0
       val n = a.numElements(); val m = b.numElements()

@@ -1013,18 +1013,16 @@ object AggOps extends OpFamily {
       "value", "event_id", bReps = 200)
 
   private val BootP = 2147483647L // 2^31 - 1
-  /** Per-(row, replicate) uniform and Poisson(1) weight SQL text shared
-    * by the bootstrap family — identical strings in every consumer so
-    * the plans (and the interpolated oracle constants) can never drift.
-    * Parameterized over the replicate term / uniform term so the r21
-    * single-pass wide aggregate (b inlined as a literal per replicate)
-    * interpolates the IDENTICAL arithmetic text the exploded form used.
+  /** Per-(row, replicate) uniform `u` over columns `id` and `b`, and the
+    * Poisson(1) weight drawn from it — SQL text shared by the bootstrap
+    * family, identical strings in every consumer so the plans (and the
+    * interpolated oracle constants) can never drift.
     */
-  private def bootUExprFor(bTerm: String): String =
-    s"CAST(pmod(pmod((id + 7919) * (2 * $bTerm + 1), $BootP) " +
+  private val bootUExpr: String =
+    s"CAST(pmod(pmod((id + 7919) * (2 * b + 1), $BootP) " +
       s"* 1103515245, $BootP) AS DOUBLE) / $BootP"
-  private def bootWExprFor(uTerm: String): String = (0 to 6).map(k =>
-    s"WHEN $uTerm < ${poissonCums(k)} THEN $k").mkString(
+  private val bootWExpr: String = (0 to 6).map(k =>
+    s"WHEN u < ${poissonCums(k)} THEN $k").mkString(
     "CASE ", " ", " ELSE 7 END")
 
   private[graft] def bootstrapCiOn(df: DataFrame, valCol: String,
@@ -1032,8 +1030,6 @@ object AggOps extends OpFamily {
     require(bReps >= 4, s"bootstrapCi needs >= 4 replicates: $bReps")
     val loRank = math.max(1, (0.025 * bReps).toInt)
     val hiRank = bReps + 1 - loRank
-    val uExpr = bootUExprFor("b")
-    val wExpr = bootWExprFor("u")
     // The explode(sequence(1, B)) stays DELIBERATELY (r21, measured):
     // it runs inside one WholeStageCodegen loop feeding a map-side
     // partial hash aggregate with B groups — 3× FASTER cold and warm
@@ -1052,8 +1048,8 @@ object AggOps extends OpFamily {
     val means = base
       .select(col("id"), col("vu"),
         explode(expr(s"sequence(1, $bReps)")).as("b"))
-      .withColumn("u", expr(uExpr))
-      .withColumn("w", expr(wExpr).cast("long"))
+      .withColumn("u", expr(bootUExpr))
+      .withColumn("w", expr(bootWExpr).cast("long"))
       .groupBy(col("b"))
       .agg(sum(col("w") * col("vu")).as("sw"), sum(col("w")).as("cw"))
       // all-zero-weight replicate (P ≈ e^−n, real for tiny inputs via
@@ -1112,8 +1108,8 @@ object AggOps extends OpFamily {
     val means = base
       .select(col("g"), col("id"), col("vu"),
         explode(expr(s"sequence(1, $bReps)")).as("b"))
-      .withColumn("u", expr(bootUExprFor("b")))
-      .withColumn("w", expr(bootWExprFor("u")).cast("long"))
+      .withColumn("u", expr(bootUExpr))
+      .withColumn("w", expr(bootWExpr).cast("long"))
       .groupBy(col("g"), col("b"))
       .agg(sum(col("w") * col("vu")).as("sw"), sum(col("w")).as("cw"))
       // same all-zero-weight guard as bootstrapCiOn; a NULL group mean

@@ -39,9 +39,6 @@ object DedupOps extends OpFamily {
       rnd.nextInt(Int.MaxValue).toLong))
   }
 
-  private def normalized: Column =
-    regexp_replace(trim(lower(col("text"))), " +", " ")
-
   /** The REGISTERED planted-dup fixtures offset copies by +PlantBase /
     * +2·PlantBase with PlantBase pinned at 100000, because the DuckDB
     * oracles replay those literal offsets; original ids must then stay
@@ -112,7 +109,7 @@ object DedupOps extends OpFamily {
   /** Exact dedup: group by content hash, surface the duplicate groups. */
   def exactDupGroups(s: SparkSession, d: String): DataFrame =
     withExactDupes(s, d)
-      .groupBy(md5(normalized).as("fp"))
+      .groupBy(md5(TextOps.normalizedText(col("text"))).as("fp"))
       .agg(count(lit(1)).as("n"),
         min(col("doc_id")).as("keep_id"),
         max(col("doc_id")).as("dup_id"))

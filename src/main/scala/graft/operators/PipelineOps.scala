@@ -47,7 +47,7 @@ object PipelineOps extends OpFamily {
     // 2. exact dedup: keep the minimum doc_id per normalized content
     // fingerprint (one groupBy + semi-join, the dedup_keep_first rule)
     val fped = quality.withColumn("fp",
-      md5(regexp_replace(trim(lower(col("text"))), " +", " ")))
+      md5(TextOps.normalizedText(col("text"))))
     // exact has TWO consumers (the Jaccard pair build and the anti-join
     // probe) and survivors THREE (rates, mixed, the funnel count) — the
     // two-consumers rule: materialize, or every downstream stage (and
@@ -212,7 +212,7 @@ object PipelineOps extends OpFamily {
           col("source"),
           concat_ws(" ", reverse(toks)).as("text")))
       .localCheckpoint() // probed three times (fp, near-dup, verdicts)
-    def fp(c: Column) = md5(regexp_replace(trim(lower(c)), " +", " "))
+    def fp(c: Column) = md5(TextOps.normalizedText(c))
     val idxFp = base.select(fp(col("text")).as("fp")).distinct()
       .withColumn("fp_hit", lit(1))
     // near-dup probe against the SAME persisted index artifact

@@ -741,11 +741,18 @@ object TextOps extends OpFamily {
       .orderBy(col("doc_id"))
   }
 
+  /** Whitespace-normalized text: lower-cased, trimmed, runs of spaces
+    * collapsed to one — the content key of every exact-dedup fingerprint.
+    * The oracle SQL spells the same expression out in DuckDB dialect.
+    */
+  private[graft] def normalizedText(text: Column): Column =
+    regexp_replace(trim(lower(text)), " +", " ")
+
   /** Content fingerprints of whitespace-normalized text: md5 plus a 64-bit
     * hex fingerprint (sha256 prefix) — the join key for exact dedup at scale.
     */
   def fingerprint(s: SparkSession, d: String): DataFrame = {
-    val normalized = regexp_replace(trim(lower(col("text"))), " +", " ")
+    val normalized = normalizedText(col("text"))
     Tables.documents(s, d)
       .select(
         col("doc_id"),

@@ -737,7 +737,7 @@ object StreamPipelines {
         size(array_distinct(w)).cast("double") / size(w))
       .filter(col("n_tokens") >= 5 && col("ttr") > 0.3)
       .withColumn("fp",
-        md5(regexp_replace(trim(lower(col("text"))), " +", " ")))
+        md5(graft.operators.TextOps.normalizedText(col("text"))))
       .dropDuplicatesWithinWatermark("fp")
       .filter(pmod(pmod(col("doc_id"), lit(1000)) * lit(761L), lit(1000)) <
         coalesce(element_at(typedLit(keepPerMille), col("lang")),

@@ -3,22 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites: one local JVM session, UTC, small shuffle
-  * fan-out (matches the harness config in Verify/Bench).
+/** Shared session for all suites: the mains' [[Harness.session]] on 4
+  * cores, pinned rather than read from SPARK_GRAFT_CPUS so the suites'
+  * shuffle fan-out does not follow the test machine's core count.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosConf, "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(4)
   val sf: String = "/root/testdata/sf0.001"
 }
 
