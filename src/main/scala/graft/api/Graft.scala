@@ -368,12 +368,15 @@ object Graft {
     * non-k-core (the same loud-failure contract as converged PageRank).
     * `edges` must list every undirected edge in BOTH directions (symmetry
     * contract; use union with the swapped columns if yours are
-    * one-directional).
+    * one-directional). `edges` is materialized once up front, so its
+    * pipeline is evaluated once however many peel rounds run; each round
+    * then materializes only its node-sized survivor set.
     */
   def kCore(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", k: Int = 3, maxRounds: Int = 30): DataFrame =
     graft.operators.GraphOps.kCoreFrom(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")),
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .localCheckpoint(),
       k, maxRounds, requireFixpoint = true)
       .withColumnRenamed("src", "node")
 

@@ -34,7 +34,10 @@ object GraphOps extends OpFamily {
     // doubled materialization per query for rows that are a pure
     // column-swap of each other. Consumers scan the cached half twice
     // per pass — cheap narrow rescans — and no caller needs its own
-    // checkpoint anymore.
+    // checkpoint anymore. Iterative consumers rescan it every round:
+    // kCoreFrom semi-joins the union against each round's node-sized
+    // survivor set and materializes nothing edge-sized itself.
+    // `materializeHalf = false` is for single-pass consumers only.
     val e0 = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
         col("o_orderkey") === col("l_orderkey"))
@@ -588,16 +591,15 @@ object GraphOps extends OpFamily {
     * the peel cascade is depth ≤ 2 — customers only neighbor suppliers —
     * so 4 rounds reach the true fixpoint with slack; GraphSpec asserts
     * fixpoint-equality against an unbounded driver-side reference peel,
-    * and on a hand-built cascade graph. Per round: one groupBy degree +
-    * two semi-joins — key-partitioned shuffles only, composed lazily into
-    * one job (shape-identical rounds, codegen compiled once).
+    * and on a hand-built cascade graph. The edges come from
+    * [[custSuppEdges]]'s materialized half, so the peel itself
+    * materializes only node-sized survivor tables (see [[kCoreFrom]]).
     */
   private[graft] val KCoreK = 10
   private[graft] val KCoreRounds = 4
 
   def kCore(s: SparkSession, d: String): DataFrame =
-    kCoreFrom(custSuppEdges(s, d, materializeHalf = false), KCoreK,
-      KCoreRounds)
+    kCoreFrom(custSuppEdges(s, d), KCoreK, KCoreRounds)
       .groupBy(when(col("src") % 2 === 0, lit("customer"))
         .otherwise(lit("supplier")).as("kind"))
       .agg(count(lit(1)).as("n_core_nodes"),
@@ -612,6 +614,31 @@ object GraphOps extends OpFamily {
     * src and dst against the same survivor set keeps the edge set
     * symmetric round over round.
     *
+    * Shape: round r aggregates (src, deg) over `live` — the input edges
+    * whose two endpoints both survived round r−1 (two left-semi joins of
+    * the INPUT against the previous survivor set; round 1 reads the
+    * input itself) — and materializes only the node-sized survivor set
+    * (deg ≥ k). Survivor sets shrink monotonically, so filtering the
+    * input is the same as filtering the previous round's edges, and no
+    * edge-sized frame is ever materialized here: the caller hands in an
+    * edge frame that is cheap to rescan (a checkpoint, or a lazy view
+    * over one), which every round scans once.
+    *
+    * The TWO-CONSUMERS rule: a frame that the next step reads twice must
+    * be MATERIALIZED, or each consumer re-evaluates the shared subtree
+    * and the plan grows exponentially in the round count (measured 13 s
+    * vs 4 s at sf0.01 when the peel rounds were composed lazily). Here
+    * the survivor set is that frame — the next round semi-joins it on
+    * src AND on dst. Contrast [[pageRank]], whose per-round rank table
+    * has a single consumer and composes linearly.
+    *
+    * Fixpoint: an observe() on the degree aggregate counts the nodes
+    * with 1 ≤ deg < k (a count, so an empty round reads 0), riding the
+    * survivor checkpoint's own job. Zero means the round peeled no node
+    * and so removed no edge — every later round would be a no-op, so the
+    * early exit is output-identical to the oracle's full unrolled round
+    * count, and that round's survivor set already is the answer.
+    *
     * `requireFixpoint = true` (the [[graft.api.Graft.kCore]] contract,
     * where `rounds` is a SAFETY CAP) throws if the cap is hit before the
     * no-op-round fixpoint — a capped non-k-core must fail loudly, the
@@ -621,40 +648,30 @@ object GraphOps extends OpFamily {
     */
   private[graft] def kCoreFrom(edgeDf: DataFrame, k: Int,
       rounds: Int, requireFixpoint: Boolean = false): DataFrame = {
-    // edge count rides each round's own materialization via observe()
-    // (the clusterPairsOn pattern — zero extra jobs)
-    def ckptCount(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint()
-      (ck, obs.get("n").asInstanceOf[Long])
-    }
-    var (edges, n) = ckptCount(edgeDf)
+    def degrees(live: DataFrame): DataFrame =
+      live.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    var live = edgeDf
     var round = 0
-    var fixed = false
-    while (!fixed && round < rounds) {
+    var core: Option[DataFrame] = None
+    while (core.isEmpty && round < rounds) {
       round += 1
-      val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src"))
-      // each round's edge set is consumed TWICE by the next round (degree
-      // groupBy + semi-join base), so rounds must MATERIALIZE (the bfsHops
-      // shape) — composing them lazily re-evaluates shared subtrees and
-      // the plan cost goes exponential in the round count (measured 13 s
-      // vs 4 s at sf0.01). Contrast pageRank, whose per-round rank table
-      // has a single consumer and composes linearly.
-      val (e2, n2) = ckptCount(edges
-        .join(keep, Seq("src"), "left_semi")
-        .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi"))
-      // a round that removed NOTHING proves the fixpoint: degrees are
-      // unchanged, so every remaining round would be a no-op — early exit
-      // is output-identical to the oracle's full unrolled round count
-      fixed = n2 == n
-      edges = e2; n = n2
+      val obs = org.apache.spark.sql.Observation()
+      val survivors = degrees(live)
+        .observe(obs, count(when(col("deg") < k, 1)).as("peeled"))
+        .filter(col("deg") >= k)
+        .localCheckpoint()
+      // the survivor set is read twice by the next round (src and dst
+      // semi-joins): two consumers, so it is materialized — node-sized
+      if (obs.get("peeled") == 0L) core = Some(survivors)
+      else live = edgeDf
+        .join(survivors.select(col("src")), Seq("src"), "left_semi")
+        .join(survivors.select(col("src").as("dst")), Seq("dst"), "left_semi")
     }
-    if (requireFixpoint && !fixed)
+    if (requireFixpoint && core.isEmpty)
       throw new IllegalStateException(
         s"kCore: peel did not reach the fixpoint within rounds=$rounds " +
           "(surviving nodes may still have degree < k); raise maxRounds")
-    edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    core.getOrElse(degrees(live))
   }
 
   /** Combined duplication corpus: originals ∪ planted exact copies (every

@@ -145,6 +145,15 @@ class GraftApiSpec extends AnyFunSuite {
       Graft.kCore(sym, k = 2, maxRounds = 1).collect()
     }
     assert(e1.getMessage.contains("fixpoint"))
+    // the boundary: three peel rounds (8, 7, 6) plus the no-op round that
+    // proves the fixpoint fit in 4, so 4 returns the cycle and 3 throws
+    val core = Graft.kCore(sym, k = 2, maxRounds = 4).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(core === (1L to 5L).map(_ -> 2L).toMap)
+    val e3 = intercept[IllegalStateException] {
+      Graft.kCore(sym, k = 2, maxRounds = 3).collect()
+    }
+    assert(e3.getMessage.contains("fixpoint"))
     // triangle + tail: round 1 peels the tail (not a no-op), so the cap
     // fires before the fixpoint round can prove convergence
     val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 5L))
@@ -153,6 +162,21 @@ class GraftApiSpec extends AnyFunSuite {
       Graft.kTruss(pairs, k = 3, maxRounds = 1).collect()
     }
     assert(e2.getMessage.contains("fixpoint"))
+  }
+
+  test("kCore on degenerate graphs: empty input, and a star that peels to nothing") {
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    assert(Graft.kCore(empty, k = 2).collect().isEmpty)
+    // star {1-2, 1-3} at k = 2: round 1 keeps only the center, whose
+    // edges all lead to peeled leaves, so round 2 sees no edge at all
+    // and is the no-op round that proves the (empty) fixpoint
+    val und = Seq((1L, 2L), (1L, 3L))
+    val star = (und ++ und.map(_.swap)).toDF("src", "dst")
+    assert(Graft.kCore(star, k = 2, maxRounds = 2).collect().isEmpty)
+    val e = intercept[IllegalStateException] {
+      Graft.kCore(star, k = 2, maxRounds = 1).collect()
+    }
+    assert(e.getMessage.contains("fixpoint"))
   }
 
   test("labelProp rejects node ids outside the argmax encoding range") {
